@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Lets the harness wait until every listener event posted so far has been
+  * delivered (the listener bus is package-private to Spark). */
+object ErbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
